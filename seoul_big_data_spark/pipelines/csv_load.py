@@ -5,10 +5,13 @@ dataset: derive NLDATA_/TMP_ names → latest checkpoint row → open CSV →
 ordered column metadata → per-line INSERT with row numbers and resume filter
 → audit UPDATE.
 
-Engine shape: the catalog joins are broadcast (J1/J2), the load is one lazy
-plan per dataset (C4→S4→F6→J3→C6), and the audit is a merge_update (C8).
-Catalog driving stays driver-side (it is catalog-sized); data never loops on
-the driver."""
+Engine shape: the catalog lookups are single-stage driver fetches (the
+checkpoint is a filter → ``desc(id)`` → ``first()``; the column metadata is
+collected once and sorted on the driver, since it is catalog-sized), the
+load is one lazy plan per dataset (C4→S4→F6→J3→C6), and the audit is an
+in-place ``when(id == physical_id)`` column update on the audit frame (C8),
+so the lineage threaded from dataset to dataset stays one leaf with no
+join. Data never loops on the driver."""
 
 from __future__ import annotations
 
@@ -17,15 +20,13 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.windows import latest_per_group
 from ..sources.csv_ingest import load_csv_with_catalog_schema
-from ..sources.writers import merge_update
 
 
 @dataclass
 class LoadResult:
     staging: DataFrame  # typed rows that were (newly) loaded
-    ptable_updated: DataFrame  # audit table after the C8 merge
+    ptable_updated: DataFrame  # audit table after the C8 update
     table_name: str
     loaded_rows: int
 
@@ -35,26 +36,13 @@ def staging_table_name(dataset_id: int) -> str:
     return f"NLDATA_{str(dataset_id).rjust(6, '0')}"
 
 
-def select_datasets(catalog: DataFrame, id_list: list[int]) -> DataFrame:
-    """F1/F3 — the reference's driving filter
-    (data_seoul_2_csv_noopenapi.py:42-46)."""
-    return catalog.filter(
-        (F.col("collect_site_id") == 1)
-        & (F.col("is_collect_yn") == "Y")
-        & F.col("id").isin(id_list)
-    )
-
-
 def latest_checkpoint(ptable: DataFrame, dataset_id: int) -> tuple[int, int]:
-    """W1/C2 — newest MANAGE_PHYSICAL_TABLE row for the dataset
+    """C2 — newest MANAGE_PHYSICAL_TABLE row for the dataset
     (ref: ORDER BY ID DESC + fetchall()[0], data_seoul_2_csv_noopenapi.py:
-    74-79). Returns (manage_table_id, start_idx); driver-side single row."""
+    74-79). Returns (manage_table_id, start_idx); one take-ordered stage."""
     row = (
-        latest_per_group(
-            ptable.filter(F.col("data_basic_id") == dataset_id),
-            ["data_basic_id"],
-            [F.desc("id")],
-        )
+        ptable.filter(F.col("data_basic_id") == dataset_id)
+        .orderBy(F.desc("id"))
         .select("id", "start_idx")
         .first()
     )
@@ -65,14 +53,15 @@ def latest_checkpoint(ptable: DataFrame, dataset_id: int) -> tuple[int, int]:
 
 def ordered_columns(pcolumn: DataFrame, physical_id: int) -> list[tuple[str, str]]:
     """C3 — ordered (name, type) pairs for one physical table
-    (ref: data_seoul_2_csv_noopenapi.py:89-96). Catalog-sized collect."""
+    (ref: data_seoul_2_csv_noopenapi.py:89-96). Catalog-sized, so it is
+    collected unordered and sorted on the driver: a Spark ``orderBy`` would
+    add a range-partition sampling job."""
     rows = (
         pcolumn.filter(F.col("data_physical_id") == physical_id)
-        .orderBy("physical_column_order")
-        .select("physical_column_name", "physical_column_type")
+        .select("physical_column_order", "physical_column_name", "physical_column_type")
         .collect()
     )
-    return [(r[0], r[1]) for r in rows]
+    return [(name, typ) for _, name, typ in sorted(rows, key=lambda r: r[0])]
 
 
 def run(
@@ -96,19 +85,15 @@ def run(
     loaded = staging.count()
     # C8 audit: inserted flag, server-side now, cumulative row count
     # (ref: list_total_count seeded with start_idx,
-    #  data_seoul_2_csv_noopenapi.py:112,133-140).
-    audit = spark.createDataFrame(
-        [(physical_id,)], "id long"
-    ).select(
-        "id",
-        F.lit("Y").alias("data_inserted_yn"),
-        F.current_timestamp().alias("data_insert_date"),
-        F.lit(start_idx + loaded).cast("long").alias("data_insert_row"),
-    )
-    updated = merge_update(
-        ptable,
-        audit,
-        "id",
-        ["data_inserted_yn", "data_insert_date", "data_insert_row"],
+    #  data_seoul_2_csv_noopenapi.py:112,133-140), set in place on the
+    # checkpoint row as one projection.
+    hit = F.col("id") == physical_id
+    new = {
+        "data_inserted_yn": F.lit("Y"),
+        "data_insert_date": F.current_timestamp(),
+        "data_insert_row": F.lit(start_idx + loaded).cast("long"),
+    }
+    updated = ptable.withColumns(
+        {c: F.when(hit, v).otherwise(F.col(c)) for c, v in new.items()}
     )
     return LoadResult(staging, updated, staging_table_name(dataset_id), loaded)

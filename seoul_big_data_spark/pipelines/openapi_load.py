@@ -9,8 +9,9 @@ load as pipeline 2.
 Engine shape: the schema-derivation phase is metadata-plane work — tiny
 inputs, runs eagerly to produce the StructType *before* the lazy data-plane
 load (SURVEY.md §3.3). The URL derivations are the X5-X9 column expressions
-applied to a one-row DataFrame so the logic is the same tested code that
-would run at scale over many datasets at once."""
+applied to literals over a one-row, one-partition ``spark.range`` (JVM only,
+no Python worker), so the logic is the same tested code that would run at
+scale over many datasets at once."""
 
 from __future__ import annotations
 
@@ -39,14 +40,16 @@ def derive_master_url(
 ) -> str:
     """X5/X6/X7/X8 + F9 — the reference's URL algebra
     (data_seoul_3_csv.py:93-106), executed through the engine's column
-    expressions on a single-row frame.
+    expressions on a JVM single-row frame.
 
     Reference branch map, on the slash-terminated URL: id 239 →
     ``rsplit('/', 1)[0]`` (drops only the trailing empty segment), id 240 →
     ``rsplit('/', 2)[0]``, default → ``rsplit('/', 3)[0]``; and id 239
     substitutes the *train* auth key (data_seoul_3_csv.py:94-97)."""
     key = auth_key_train if (dataset_id == 239 and auth_key_train) else auth_key
-    df = spark.createDataFrame([(dataset_id, sample_url)], "id long, url string")
+    df = spark.range(1, numPartitions=1).select(
+        F.lit(dataset_id).alias("id"), F.lit(sample_url).alias("url")
+    )
     keyed = scalar.replace_literal(
         "url", "/sample/", F.concat(F.lit("/"), F.lit(key), F.lit("/"))
     )

@@ -37,8 +37,9 @@ def catalog(spark):
 def ptable(spark):
     rows = [
         # id, data_basic_id, start_idx, data_inserted_yn, data_insert_date, data_insert_row
+        (2, 5758, 3, "N", None, 3),  # newest for 5758 (resume mid-file), not last
+        (0, 5758, 5, "N", None, 5),
         (1, 5758, 0, "N", None, 0),
-        (2, 5758, 3, "N", None, 3),  # newest for 5758 (resume mid-file)
         (3, 23, 0, "N", None, 0),  # openapi dataset, full load
         (4, 239, 99, "N", None, 99),  # past-end checkpoint
     ]
@@ -53,10 +54,11 @@ def ptable(spark):
 def pcolumn(spark):
     rows = []
     for pid in (1, 2, 3, 4):
+        # shuffled arrival order, non-contiguous physical_column_order
         rows += [
-            (pid * 10 + 1, pid, "이름", "COL_001", "VARCHAR", 1),
-            (pid * 10 + 2, pid, "수량", "COL_002", "NUMBER", 2),
-            (pid * 10 + 3, pid, "일자", "COL_003", "DATE", 3),
+            (pid * 10 + 3, pid, "일자", "COL_003", "DATE", 30),
+            (pid * 10 + 1, pid, "이름", "COL_001", "VARCHAR", 5),
+            (pid * 10 + 2, pid, "수량", "COL_002", "NUMBER", 12),
         ]
     return spark.createDataFrame(
         rows,
@@ -168,6 +170,59 @@ def test_csv_load_union_property(spark, catalog, ptable, pcolumn, csv_file):
     head = full.filter(F.col("ID") <= 3)
     assert head.unionByName(part).count() == full.count()
     assert head.unionByName(part).select("ID").distinct().count() == 7
+
+
+def test_catalog_lookups(spark, ptable, pcolumn):
+    # rows arrive shuffled with order values 5/12/30 → sorted by order
+    assert csv_load.ordered_columns(pcolumn, 2) == [
+        ("COL_001", "VARCHAR"),
+        ("COL_002", "NUMBER"),
+        ("COL_003", "DATE"),
+    ]
+    # three checkpoints for 5758 (ids 2, 0, 1) → the largest id wins
+    assert csv_load.latest_checkpoint(ptable, 5758) == (2, 3)
+    with pytest.raises(ValueError):
+        csv_load.latest_checkpoint(ptable, 240)
+
+
+def _analyzed_nodes(df):
+    plan = df._jdf.queryExecution().analyzed()
+    names = [line.lstrip(" :+-").split(" ")[0] for line in plan.treeString().splitlines()]
+    return names, plan.collectLeaves().size()
+
+
+def test_csv_load_audit_lineage_flat(spark, catalog, ptable, pcolumn, csv_file):
+    """Threading the audit frame through two loads keeps it one projection
+    over the input's leaves (no join per dataset), with the input's schema
+    and the rows merge_update would give."""
+    res1 = csv_load.run(spark, catalog, ptable, pcolumn, csv_file, 5758)
+    res2 = csv_load.run(spark, catalog, res1.ptable_updated, pcolumn, csv_file, 23)
+    got = res2.ptable_updated
+
+    names, leaves = _analyzed_nodes(got)
+    assert not [n for n in names if n.endswith("Join")], names
+    assert leaves == _analyzed_nodes(ptable)[1]
+    assert [(f.name, f.dataType) for f in got.schema] == [
+        (f.name, f.dataType) for f in ptable.schema
+    ]
+
+    def audit(pid, total):
+        return spark.createDataFrame(
+            [(pid, "Y", total)], "id long, data_inserted_yn string, data_insert_row long"
+        ).withColumn("data_insert_date", F.current_timestamp())
+
+    cols = ["data_inserted_yn", "data_insert_date", "data_insert_row"]
+    want = merge_update(ptable, audit(2, 3 + res1.loaded_rows), "id", cols)
+    want = merge_update(want, audit(3, 0 + res2.loaded_rows), "id", cols)
+
+    def rows(df):
+        return sorted(
+            tuple(r[c] for c in df.columns if c != "data_insert_date")
+            + (r["data_insert_date"] is not None,)
+            for r in df.collect()
+        )
+
+    assert rows(got) == rows(want)
 
 
 # --- pipeline 3: OpenAPI-driven load ----------------------------------------
