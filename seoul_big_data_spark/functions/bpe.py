@@ -20,7 +20,6 @@ descending = longest-match-first), never per occurrence.
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 import re
@@ -90,10 +89,6 @@ def encode_words(words: DataFrame, word_col: str = "word") -> DataFrame:
             )
 
     return words.mapInPandas(run, schema)
-
-
-def doc_fingerprint(enc_concat: str) -> str:
-    return hashlib.md5(enc_concat.encode()).hexdigest()
 
 
 def chars_of(word_col: str) -> F.Column:

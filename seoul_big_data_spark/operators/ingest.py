@@ -184,8 +184,3 @@ def load_with_resume(
     if column_names:
         out = bind_schema(out, ["ID", *column_names])
     return out
-
-
-def audit_counts(df: DataFrame, dataset_col: str) -> DataFrame:
-    """A1/C8 — per-dataset loaded-row counts for the audit table."""
-    return df.groupBy(dataset_col).agg(F.count("*").alias("data_insert_row"))

@@ -263,116 +263,6 @@ def sessionize(
     )
 
 
-def gaps_auto(
-    df: DataFrame,
-    part_cols: list[str],
-    ts_col: str,
-    tiebreak_cols: list[str] | None = None,
-    out: str = "gap",
-    hot_threshold: int = 200_000,
-    n_slices: int = 256,
-) -> DataFrame:
-    """Skew-split inter-arrival gaps — :func:`gaps_scalable`'s routing
-    companion (same rationale as :func:`sessionize_auto`): keys with >
-    ``hot_threshold`` rows take the slice-and-stitch path, the cold mass
-    takes one plain lag window. ``|hot| ≤ N/hot_threshold`` by
-    construction, so the routing broadcast is provably safe. Gap multiset
-    identical to the window form on both paths. Same measured outcome as
-    :func:`sessionize_auto` (see its docstring): at every measurable tier
-    the pure :func:`gaps_scalable` dominates, so production call sites use
-    that; this is the documented asymptotic alternative."""
-    from pyspark import StorageLevel
-
-    tie = list(tiebreak_cols or [])
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    counts = df.groupBy(*part_cols).agg(F.count("*").alias("_n"))
-    hot = counts.filter(F.col("_n") > hot_threshold).select(*part_cols)
-    w = Window.partitionBy(*part_cols).orderBy(ts_col, *tie)
-    ts = F.col(ts_col)
-    cold = (
-        df.join(F.broadcast(hot), part_cols, "left_anti")
-        .select(*part_cols, (ts - F.lag(ts).over(w)).alias(out))
-        .filter(F.col(out).isNotNull())
-    )
-    hot_g = gaps_scalable(
-        df.join(F.broadcast(hot), part_cols, "left_semi"),
-        part_cols,
-        ts_col,
-        tiebreak_cols=tie,
-        out=out,
-        n_slices=n_slices,
-    )
-    return cold.unionByName(hot_g)
-
-
-def sessionize_auto(
-    df: DataFrame,
-    user_col: str,
-    ts_col: str,
-    gap_minutes: int = 30,
-    gap_units: int | None = None,
-    tiebreak_cols: list[str] | None = None,
-    hot_threshold: int = 200_000,
-    n_slices: int = 256,
-) -> DataFrame:
-    """Skew-split sessionization — the production form. The plain window
-    (:func:`sessionize`) is optimal for the cold mass but serializes a hot
-    key's whole timeline into one task; the bucket-and-stitch form
-    (:func:`sessionize_scalable`) is hot-key-proof but pays ~2 extra
-    passes on EVERY key. This routes each user to the right plan — the
-    AQE skew-join split idea applied to a window, which AQE itself cannot
-    split:
-
-    1. per-user counts (combinable aggregate, skew-immune);
-    2. hot = users with > ``hot_threshold`` events. ``|hot| ≤
-       N/hot_threshold`` BY CONSTRUCTION (at 100 B events and the default
-       threshold that is ≤ 500k ids, a few MB) — so the broadcast below
-       is provably safe, not heuristically;
-    3. cold mass → plain window; hot slice → bucket-and-stitch; union.
-
-    Both paths produce bit-identical session ids (each pinned against the
-    window form; tests/test_windows_scalable.py adds the mixed-population
-    union case), so routing is invisible to consumers and oracles. The
-    input is persisted (counts + both branches read it; the house
-    persist-and-let-LRU-evict lifecycle) — project to the columns you
-    need BEFORE calling.
-
-    MEASURED OUTCOME (r9, x32 = 3.2M events / 32 cores): the routing
-    plumbing (persist + counts + anti/semi joins + two branches) costs
-    MORE than it saves at every tier this box can measure — uniform x32
-    2.27 s vs the pure scalable form's 1.95 s, and hot-shape ratios
-    1.02–1.28 vs the pure form's 0.74–0.97 — so production call sites use
-    :func:`sessionize_scalable` directly. This form is the asymptotic
-    design for corpora where the cold mass is large enough that one plain
-    window pass beats slicing everything (the per-branch fixed costs
-    amortize away as N grows); re-evaluate the routing threshold there
-    before adopting.
-    """
-    from pyspark import StorageLevel
-
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    counts = df.groupBy(user_col).agg(F.count("*").alias("_n"))
-    hot = counts.filter(F.col("_n") > hot_threshold).select(user_col)
-    cold_s = sessionize(
-        df.join(F.broadcast(hot), user_col, "left_anti"),
-        user_col,
-        ts_col,
-        gap_minutes,
-        gap_units=gap_units,
-        tiebreak_cols=tiebreak_cols,
-    )
-    hot_s = sessionize_scalable(
-        df.join(F.broadcast(hot), user_col, "left_semi"),
-        user_col,
-        ts_col,
-        gap_minutes,
-        n_slices=n_slices,
-        gap_units=gap_units,
-        tiebreak_cols=tiebreak_cols,
-    )
-    return cold_s.unionByName(hot_s)
-
-
 #: Expected sampled rows for a key sitting exactly at ``hot_threshold``
 #: under the sampled probe (below: detection cutoff is half of this).
 _PROBE_SAMPLE_TARGET = 64
@@ -408,7 +298,10 @@ def _static_row_bound(df: DataFrame) -> int | None:
         return None
     from urllib.parse import unquote, urlparse
 
-    import pyarrow.parquet as pq
+    try:
+        import pyarrow.parquet as pq
+    except ImportError:  # no footer reader: the sampled probe decides
+        return None
 
     total = 0
     for f in files:
@@ -467,13 +360,15 @@ def _hot_key_stats(
     of itself — the pre-r10 exact semantics at sizes where exactness is
     free.
 
-    Driver state: 3–4 scalars per pass (annotated-collect convention;
-    :func:`_range_probe` explains why a collect, not a broadcast
-    singleton attach). Routing is the ONLY thing the probe decides —
-    session ids are bit-identical on every route (a single slice's local
-    sessions ARE its global sessions; pinned in
-    tests/test_windows_scalable.py) — so sampling cannot affect results,
-    only which keys pay the slice-and-stitch machinery.
+    Driver state: 3–4 scalars per pass (annotated-collect convention).
+    Collected rather than cross-joined: a broadcast singleton attach plans
+    as BroadcastNestedLoopJoin, which breaks consumers whose audited
+    design promise is "no BNLJ anywhere in the plan", and the collected
+    literals keep the slice expression foldable. Routing is the ONLY
+    thing the probe decides — session ids are bit-identical on every
+    route (a single slice's local sessions ARE its global sessions; pinned
+    in tests/test_windows_scalable.py) — so sampling cannot affect
+    results, only which keys pay the slice-and-stitch machinery.
 
     WHY hot routing (r10, VERDICT r9 What's wrong #2): slicing EVERY key's
     timeline into global time buckets fragments the typical key — at x512
@@ -557,14 +452,21 @@ def _hot_key_stats(
 def _hot_sliced(
     d: DataFrame,
     key_cols: list[str],
-    hot: DataFrame | None,
-    time_slice,
+    hot: DataFrame,
+    ts,
+    bounds: tuple[float, float],
+    n_slices: int,
 ) -> DataFrame:
-    """Attach ``_slice``: the time-bucket id for hot keys, 0 for everyone
-    else (broadcast left join on the bounded hot-key set; no join at all
-    when nothing is hot)."""
-    if hot is None:
-        return d.withColumn("_slice", F.lit(0).cast("bigint"))
+    """Attach ``_slice``: hot keys get their fixed-width global time bucket
+    ``least(floor((ts - lo) / width), n_slices - 1)`` over the probe's
+    ``(lo, hi)``, every other key 0 (broadcast left join on the bounded
+    hot-key set). The bucket is monotone in ``ts`` (ties share a slice), so
+    concatenating a key's slices in order is the key's global order."""
+    lo, hi = bounds
+    width = max((hi - lo) / n_slices, 1e-9)
+    time_slice = F.least(
+        F.floor((ts - F.lit(lo)) / F.lit(width)), F.lit(n_slices - 1)
+    ).cast("bigint")
     flagged = F.broadcast(hot.withColumn("_hot", F.lit(True)))
     return (
         d.join(flagged, key_cols, "left")
@@ -578,93 +480,77 @@ def _hot_sliced(
     )
 
 
-def _range_probe(df: DataFrame, col) -> tuple[float, float]:
-    """Driver-side (lo, hi) of a numeric column — TWO scalars of driver
-    state, bounded by construction (the repo's annotated-collect
-    convention). Collected rather than cross-joined: a broadcast singleton
-    attach plans as BroadcastNestedLoopJoin (Catalyst constant-folds any
-    literal equi-key back to a nested loop), which breaks consumers whose
-    audited design promise is "no BNLJ anywhere in the plan", and the
-    collected literals keep the slice expression foldable. Returns (0, 0)
-    on an empty/all-null frame — every downstream slice lands on 0 and the
-    frame is empty anyway."""
-    row = df.agg(F.min(col).alias("_lo"), F.max(col).alias("_hi")).collect()[0]
-    lo = row["_lo"]
-    hi = row["_hi"]
-    return (float(lo), float(hi)) if lo is not None else (0.0, 0.0)
-
-
-def gaps_scalable(
-    df: DataFrame,
-    part_cols: list[str],
-    ts_col: str,
-    tiebreak_cols: list[str] | None = None,
-    out: str = "gap",
-    n_slices: int = 256,
-    hot_threshold: int = 200_000,
+def _local_sessions(
+    d: DataFrame, keys: list[str], ts_col: str, tie: list[str], gap_sec: int
 ) -> DataFrame:
-    """Consecutive inter-arrival gaps of ``ts_col`` within each
-    ``part_cols`` group WITHOUT the per-key single-task window — for
-    consumers that only aggregate the gaps (mean/variance/count are
-    combinable, so the gap MULTISET is all that matters, not its order).
-
-    Same slice trick as :func:`sessionize_scalable`: ``n_slices`` global
-    time buckets from one 2-scalar driver-collected min/max probe
-    (:func:`_range_probe`); within-``(key, slice)``
-    lag gives the intra-slice gaps; the per-``(key, slice)`` first/last
-    summary (≤ ``n_slices`` rows per key, bounded by construction) yields
-    each boundary gap via a lag over slices. Union = every consecutive gap
-    exactly once: slicing is monotone in ``ts_col`` (ties share a slice),
-    so concatenating slices in order is the group's global order, and
-    min/max per slice ARE the first/last rows' timestamps.
-
-    ``ts_col`` must be numeric (cast timestamps first). Returns
-    ``part_cols + [out]`` with one row per consecutive pair (n−1 per
-    group); order-insensitive by contract.
-
-    This is the ROW-LEVEL form — use it only when individual gap rows are
-    consumed downstream. Consumers that only aggregate combinable moments
-    of the gaps (every production consumer today) should use
-    :func:`gap_moments_scalable`, which collapses to summary grain inside
-    the window stage and measured 18.8 → 6.5 s at x512
-    (events_interarrival_profile, SCALE_RUN.json).
-
-    Hot-routed slicing (r10, same rationale as :func:`sessionize_scalable`):
-    only keys above ``hot_threshold`` rows are time-sliced; cold keys take
-    slice 0 (plain lag, no boundary rows), and when NO key is hot the plan
-    is the plain window form outright.
-    """
-    tie = list(tiebreak_cols or [])
-    ts = F.col(ts_col)
-    (lo, hi), hot = _hot_key_stats(df, part_cols, ts, hot_threshold)
-    if hot is None:
-        w = Window.partitionBy(*part_cols).orderBy(ts_col, *tie)
-        return df.select(
-            *part_cols, (ts - F.lag(ts).over(w)).alias(out)
-        ).filter(F.col(out).isNotNull())
-    width = max((hi - lo) / n_slices, 1e-9)
-    slice_id = F.least(
-        F.floor((ts - F.lit(lo)) / F.lit(width)), F.lit(n_slices - 1)
-    ).cast("bigint")
-    d = _hot_sliced(df, part_cols, hot, slice_id)
-    # Persisted for the same reason as sessionize_scalable's d: the
-    # within-slice branch and the boundary-summary branch both read it.
-    from pyspark import StorageLevel
-
-    d = d.persist(StorageLevel.MEMORY_AND_DISK)
-    w_in = Window.partitionBy(*part_cols, "_slice").orderBy(ts_col, *tie)
-    within = d.select(
-        *part_cols, (ts - F.lag(ts).over(w_in)).alias(out)
-    ).filter(F.col(out).isNotNull())
-    summ = d.groupBy(*part_cols, "_slice").agg(
-        F.min(ts).alias("_first"), F.max(ts).alias("_last")
+    """Add ``_ls``, the 1-based lag-gap session index within each ``keys``
+    partition: a row opens a session when its gap to the previous row
+    (``ts_col`` cast to long, ordered by ``ts_col`` then ``tie``) is null or
+    exceeds ``gap_sec``. ``keys = [user]`` is the plain window form;
+    ``[user, "_slice"]`` numbers each slice's LOCAL sessions (a slice's
+    first event always opens one), which :func:`_stitch` makes global."""
+    tss = F.col(ts_col).cast("long")
+    w = Window.partitionBy(*keys).orderBy(ts_col, *tie)
+    gap = tss - F.lag(tss).over(w)
+    new_local = F.when(gap.isNull() | (gap > gap_sec), 1).otherwise(0)
+    return d.withColumn(
+        "_ls", F.sum(new_local).over(w.rowsBetween(Window.unboundedPreceding, 0))
     )
-    w_s = Window.partitionBy(*part_cols).orderBy("_slice")
-    boundary = summ.select(
-        *part_cols,
-        (F.col("_first") - F.lag("_last").over(w_s)).alias(out),
-    ).filter(F.col(out).isNotNull())
-    return within.unionAll(boundary)
+
+
+def _stitch(frame: DataFrame, user_col: str, first, last, gap_sec: int) -> DataFrame:
+    """Turn the local session index ``_ls`` of a frame keyed by
+    ``(user_col, _slice)`` into the global ``session_id`` (``_off`` is left
+    on the frame for the caller to drop or ignore).
+
+    1. Per-``(user, slice)`` summary: first/last second (``min(first)``,
+       ``max(last)`` — the slice's first/last rows, since the second is
+       nondecreasing in ts order) and the local session count
+       ``max(_ls)``. At most ``n_slices`` rows per user — bounded by
+       construction, independent of event count — so the stitch window
+       ``partitionBy(user).orderBy(_slice)`` is safe at any scale.
+    2. Slice k merges into the previous non-empty slice's last session iff
+       the boundary gap ≤ ``gap_sec``. With ``D_k = Σ_{j≤k} (n_local_j −
+       merge_j)`` distinct sessions after slice k, the global id of local
+       session s in slice k is ``D_{k−1} − merge_k + s`` (merge maps local
+       1 onto the previous global session; the first slice has merge 0).
+    3. The offset joins back on ``(user, slice)`` — a hash join on the
+       partitioning the window already produced."""
+    summ = frame.groupBy(user_col, "_slice").agg(
+        F.min(first).alias("_first"),
+        F.max(last).alias("_last"),
+        F.max("_ls").alias("_nloc"),
+    )
+    w_s = Window.partitionBy(user_col).orderBy("_slice")
+    merge = F.when(
+        (F.col("_first") - F.lag("_last").over(w_s)) <= gap_sec, 1
+    ).otherwise(0)
+    summ = summ.withColumn("_merge", merge)
+    w_prev = w_s.rowsBetween(Window.unboundedPreceding, -1)
+    offsets = summ.select(
+        user_col,
+        "_slice",
+        (
+            F.coalesce(F.sum(F.col("_nloc") - F.col("_merge")).over(w_prev), F.lit(0))
+            - F.col("_merge")
+        ).alias("_off"),
+    )
+    # Null-safe stitch keys: a plain equi-join would silently DROP
+    # null-keyed rows (and null-ts rows on a sliced key) that the window
+    # form keeps as ordinary partitions — the r10 null-key parity test
+    # caught exactly that. eqNullSafe stays a hash-joinable equi-key.
+    off = offsets.withColumnRenamed(user_col, "_sk").withColumnRenamed(
+        "_slice", "_ss"
+    )
+    return (
+        frame.join(
+            off,
+            F.col(user_col).eqNullSafe(F.col("_sk"))
+            & F.col("_slice").eqNullSafe(F.col("_ss")),
+        )
+        .drop("_sk", "_ss")
+        .withColumn("session_id", F.col("_off") + F.col("_ls"))
+    )
 
 
 def sessionize_scalable(
@@ -687,30 +573,19 @@ def sessionize_scalable(
     buckets — fragmentation 0.959 measured at x512, see
     :func:`_hot_key_stats`):
 
-    0. One key-grain stats pass → global ts range + the hot-key set
+    0. The hot-key probe yields the global ts range + the hot-key set
        (> ``hot_threshold`` events; ``|hot| ≤ N/hot_threshold`` by
-       construction, so the broadcast is provably safe). Cold users take
-       ``_slice = 0`` — a single slice, whose stitch below degenerates to
-       the plain window form with zero fragments. No hot keys at all →
-       the plain lag-gap window directly (no slicing machinery in the
-       plan).
-    1. HOT users slice into ``n_slices`` fixed-width global time buckets;
-       a hot timeline now spreads across up to ``n_slices`` tasks.
+       construction, so the broadcast is provably safe). No hot keys at
+       all → the plain lag-gap window directly (no slicing machinery in
+       the plan).
+    1. HOT users slice into ``n_slices`` fixed-width global time buckets
+       (:func:`_hot_sliced`); a hot timeline now spreads across up to
+       ``n_slices`` tasks. Cold users take ``_slice = 0`` — a single
+       slice, whose stitch degenerates to the plain window form.
     2. Lag-gap cumulative sum WITHIN each ``(user, slice)`` partition →
-       local session index ``_ls`` (1-based; the slice's first event is
-       always flagged locally new).
-    3. Per-``(user, slice)`` summary: first/last event second and local
-       session count. At most ``n_slices`` rows per user — bounded by
-       construction, independent of event count — so the stitch window
-       ``partitionBy(user).orderBy(_slice)`` is safe at any scale.
-    4. Stitch: slice k merges into the previous non-empty slice's last
-       session iff the boundary gap ≤ the session gap. With
-       ``D_k = Σ_{j≤k} (n_local_j − merge_j)`` distinct sessions after
-       slice k, the global id of local session s in slice k is
-       ``D_{k−1} − merge_k + s`` (merge maps local 1 onto the previous
-       global session; the first slice has merge 0).
-    5. Join the per-slice offset back on ``(user, slice)`` — a hash join
-       on the partitioning the window already produced.
+       local session index ``_ls`` (:func:`_local_sessions`).
+    3. :func:`_stitch` maps local to global session ids over a bounded
+       per-``(user, slice)`` summary and joins the offsets back.
 
     Session ids are bit-identical to the window form on BOTH routes
     (equal-second ties share a slice because slicing is monotone in the
@@ -721,8 +596,7 @@ def sessionize_scalable(
 
     The per-task row bound for a cold user is ``hot_threshold`` (one
     window task sorts at most that many rows per key); a hot user's is
-    ~``its_count/n_slices``. The stats pass costs one extra combinable
-    aggregate scan — the price that bought fragmentation ~0.
+    ~``its_count/n_slices``.
 
     This is the ROW-LEVEL form — use it only when per-event session ids
     are consumed downstream. Consumers that only read per-session
@@ -749,64 +623,17 @@ def sessionize_scalable(
             df, user_col, ts_col, gap_minutes,
             gap_units=gap_units, tiebreak_cols=tiebreak_cols,
         )
-    width = max((hi - lo) / n_slices, 1e-9)
-    slice_id = F.least(
-        F.floor((tss - F.lit(lo)) / F.lit(width)), F.lit(n_slices - 1)
-    ).cast("bigint")
-    d = _hot_sliced(df, [user_col], hot, slice_id)
-    w_in = Window.partitionBy(user_col, "_slice").orderBy(ts_col, *tie)
-    gap = tss - F.lag(tss).over(w_in)
-    new_local = F.when(gap.isNull() | (gap > gap_sec), 1).otherwise(0)
-    d = d.withColumn(
-        "_ls", F.sum(new_local).over(w_in.rowsBetween(Window.unboundedPreceding, 0))
-    )
-    # Persist the sliced+locally-sessionized frame: both the summary branch
-    # and the final join-back consume it, and without the persist each
-    # branch re-scans the source AND re-runs the window (4 scans where 2
-    # do — plan_audit's scan budget). Persist-and-let-LRU-evict lifecycle,
-    # same as q_mlprep's feats persist.
+    d = _hot_sliced(df, [user_col], hot, tss, (lo, hi), n_slices)
+    d = _local_sessions(d, [user_col, "_slice"], ts_col, tie, gap_sec)
+    # Persist the sliced+locally-sessionized frame: both the stitch summary
+    # and the join-back consume it, and without the persist each branch
+    # re-scans the source AND re-runs the window (4 scans where 2 do —
+    # plan_audit's scan budget). Persist-and-let-LRU-evict lifecycle, same
+    # as q_mlprep's feats persist.
     from pyspark import StorageLevel
 
     d = d.persist(StorageLevel.MEMORY_AND_DISK)
-    # Summary grain: ≤ n_slices rows per user. min/max of the truncated
-    # second ARE the first/last rows' seconds (the second is nondecreasing
-    # in ts order), so the boundary gap below is computed in the same
-    # truncated-long space as the window form's lag.
-    summ = d.groupBy(user_col, "_slice").agg(
-        F.min(tss).alias("_first"),
-        F.max(tss).alias("_last"),
-        F.max("_ls").alias("_nloc"),
-    )
-    w_s = Window.partitionBy(user_col).orderBy("_slice")
-    merge = F.when(
-        (F.col("_first") - F.lag("_last").over(w_s)) <= gap_sec, 1
-    ).otherwise(0)
-    summ = summ.withColumn("_merge", merge)
-    w_prev = w_s.rowsBetween(Window.unboundedPreceding, -1)
-    offsets = summ.select(
-        user_col,
-        "_slice",
-        (
-            F.coalesce(F.sum(F.col("_nloc") - F.col("_merge")).over(w_prev), F.lit(0))
-            - F.col("_merge")
-        ).alias("_off"),
-    )
-    # Null-safe stitch keys: a plain equi-join would silently DROP
-    # null-keyed rows (and null-ts rows on a sliced key) that the window
-    # form keeps as ordinary partitions — the r10 null-key parity test
-    # caught exactly that. eqNullSafe stays a hash-joinable equi-key.
-    off = offsets.withColumnRenamed(user_col, "_sk").withColumnRenamed(
-        "_slice", "_ss"
-    )
-    return (
-        d.join(
-            off,
-            F.col(user_col).eqNullSafe(F.col("_sk"))
-            & F.col("_slice").eqNullSafe(F.col("_ss")),
-        )
-        .withColumn("session_id", F.col("_off") + F.col("_ls"))
-        .drop("_slice", "_ls", "_off", "_sk", "_ss")
-    )
+    return _stitch(d, user_col, tss, tss, gap_sec).drop("_slice", "_ls", "_off")
 
 
 def sessionize_agg_scalable(
@@ -836,22 +663,21 @@ def sessionize_agg_scalable(
     window, and everything after the one big shuffle is session-grain:
 
     1. Slice + within-``(user, slice)`` lag-gap cumsum → ``_ls``
-       (identical to :func:`sessionize_scalable` steps 1–2; the only
-       corpus-sized shuffle in the plan).
+       (the same :func:`_hot_sliced` / :func:`_local_sessions` steps as
+       :func:`sessionize_scalable`; the only corpus-sized shuffle in the
+       plan).
     2. ``groupBy(user, _slice, _ls).agg(*local_aggs)`` — the grouping
        keys are a superset of the window's partition keys, so Catalyst
        plans NO exchange here: the corpus collapses to local-session
        grain inside the same stage. ``s_first_tss``/``s_last_tss``
        (min/max of the cast-to-long timestamp) are always added for the
        stitch and are visible to ``merge_aggs``.
-    3. The per-``(user, slice)`` stitch summary, offsets window, and
-       offset join all run on the step-2 frame — ≤ one row per local
+    3. :func:`_stitch` runs on the step-2 frame — ≤ one row per local
        session, bounded session grain (worst case one row per event when
        every event is its own session, i.e. never worse than the
        row-level form's join-back).
     4. ``groupBy(user, session_id).agg(*merge_aggs)`` merges the
-       fragments of boundary-spanning sessions. Session ids are the same
-       ``D_{k-1} − merge_k + s`` stitch as :func:`sessionize_scalable` —
+       fragments of boundary-spanning sessions. Session ids are
        bit-identical to the window form (pinned in
        tests/test_windows_scalable.py).
 
@@ -873,8 +699,7 @@ def sessionize_agg_scalable(
     local sessions ARE its global sessions and ``loc`` below collapses to
     true session grain instead of the fragmented near-corpus grain the
     slice-everyone r9 form produced (fragmentation 0.959 at x512 — see
-    :func:`_hot_key_stats`). The stitch runs uniformly on both routes
-    (single-slice stitch is the identity), so ids stay bit-identical.
+    :func:`_hot_key_stats`).
 
     Reserved intermediate columns: ``_slice``, ``_ls``, ``_hot``,
     ``s_first_tss``, ``s_last_tss`` (the last two are part of the
@@ -902,6 +727,18 @@ def sessionize_agg_scalable(
     tss = F.col(ts_col).cast("long")
     (lo, hi), hot = _hot_key_stats(df, [user_col], tss, hot_threshold)
     if hot is None:
+        keys, d = [user_col], df
+    else:
+        keys = [user_col, "_slice"]
+        d = _hot_sliced(df, [user_col], hot, tss, (lo, hi), n_slices)
+    # Local-session grain: no exchange (grouping keys ⊇ window partition
+    # keys). This is where the corpus-sized frame dies.
+    loc = _local_sessions(d, keys, ts_col, tie, gap_sec).groupBy(*keys, "_ls").agg(
+        F.min(tss).alias("s_first_tss"),
+        F.max(tss).alias("s_last_tss"),
+        *local_aggs,
+    )
+    if hot is None:
         # No-hot fast path (r10): with every key at a single slice the
         # stitch is the identity (D_{-1}=0, merge_0=0 → session_id = _ls),
         # so the persist, slice-summary window, offsets window, and the
@@ -912,82 +749,21 @@ def sessionize_agg_scalable(
         # are exact re-aggregations — so output columns and values are
         # bit-identical to the stitched route (pinned in
         # tests/test_windows_scalable.py).
-        w = Window.partitionBy(user_col).orderBy(ts_col, *tie)
-        gap0 = tss - F.lag(tss).over(w)
-        new0 = F.when(gap0.isNull() | (gap0 > gap_sec), 1).otherwise(0)
-        d0 = df.withColumn(
-            "_ls", F.sum(new0).over(w.rowsBetween(Window.unboundedPreceding, 0))
-        )
-        loc0 = d0.groupBy(user_col, "_ls").agg(
-            F.min(tss).alias("s_first_tss"),
-            F.max(tss).alias("s_last_tss"),
-            *local_aggs,
-        )
         return (
-            loc0.withColumn("session_id", F.col("_ls"))
+            loc.withColumn("session_id", F.col("_ls"))
             .groupBy(user_col, "session_id")
             .agg(*merge_aggs)
         )
-    width = max((hi - lo) / n_slices, 1e-9)
-    slice_id = F.least(
-        F.floor((tss - F.lit(lo)) / F.lit(width)), F.lit(n_slices - 1)
-    ).cast("bigint")
-    d = _hot_sliced(df, [user_col], hot, slice_id)
-    w_in = Window.partitionBy(user_col, "_slice").orderBy(ts_col, *tie)
-    gap = tss - F.lag(tss).over(w_in)
-    new_local = F.when(gap.isNull() | (gap > gap_sec), 1).otherwise(0)
-    d = d.withColumn(
-        "_ls", F.sum(new_local).over(w_in.rowsBetween(Window.unboundedPreceding, 0))
-    )
-    # Local-session grain: no exchange (grouping keys ⊇ window partition
-    # keys). This is where the corpus-sized frame dies.
-    loc = d.groupBy(user_col, "_slice", "_ls").agg(
-        F.min(tss).alias("s_first_tss"),
-        F.max(tss).alias("s_last_tss"),
-        *local_aggs,
-    )
     # Persisted for the stitch's two consumers (summary + offset join) —
     # session grain, so the footprint is bounded by the session count,
-    # not the corpus. Persist-and-let-LRU-evict lifecycle.
+    # not the corpus. Persist-and-let-LRU-evict lifecycle. The slice
+    # summary reads the local sessions' bounds: their min/max ARE the
+    # slice's first/last second.
     from pyspark import StorageLevel
 
     loc = loc.persist(StorageLevel.MEMORY_AND_DISK)
-    # Slice summary from the local-session frame itself: min/max of the
-    # local sessions' bounds ARE the slice's first/last second, and
-    # max(_ls) is the local session count.
-    summ = loc.groupBy(user_col, "_slice").agg(
-        F.min("s_first_tss").alias("_first"),
-        F.max("s_last_tss").alias("_last"),
-        F.max("_ls").alias("_nloc"),
-    )
-    w_s = Window.partitionBy(user_col).orderBy("_slice")
-    merge = F.when(
-        (F.col("_first") - F.lag("_last").over(w_s)) <= gap_sec, 1
-    ).otherwise(0)
-    summ = summ.withColumn("_merge", merge)
-    w_prev = w_s.rowsBetween(Window.unboundedPreceding, -1)
-    offsets = summ.select(
-        user_col,
-        "_slice",
-        (
-            F.coalesce(F.sum(F.col("_nloc") - F.col("_merge")).over(w_prev), F.lit(0))
-            - F.col("_merge")
-        ).alias("_off"),
-    )
-    # Null-safe stitch keys — same rationale as sessionize_scalable's
-    # join-back (a plain equi-join drops null-keyed/null-ts rows the
-    # window form keeps).
-    off = offsets.withColumnRenamed(user_col, "_sk").withColumnRenamed(
-        "_slice", "_ss"
-    )
     return (
-        loc.join(
-            off,
-            F.col(user_col).eqNullSafe(F.col("_sk"))
-            & F.col("_slice").eqNullSafe(F.col("_ss")),
-        )
-        .drop("_sk", "_ss")
-        .withColumn("session_id", F.col("_off") + F.col("_ls"))
+        _stitch(loc, user_col, "s_first_tss", "s_last_tss", gap_sec)
         .groupBy(user_col, "session_id")
         .agg(*merge_aggs)
     )
@@ -1003,23 +779,30 @@ def gap_moments_scalable(
     n_slices: int = 256,
     hot_threshold: int = 200_000,
 ) -> DataFrame:
-    """:func:`gaps_scalable` fused with the per-key gap aggregate — for
-    consumers that only read combinable MOMENTS of the gap multiset
+    """Per-key moments of the consecutive inter-arrival gaps of ``ts_col``
+    within each ``part_cols`` group WITHOUT the per-key single-task window
+    — for consumers that only read combinable MOMENTS of the gap multiset
     (count/sum/sum-of-squares — mean, rate, cv), never individual gaps.
 
-    :func:`gaps_scalable` persists the corpus-sized sliced frame because
-    its two branches (within-slice lags, boundary summary) both scan it,
-    and returns one row per gap for the caller to aggregate. Here both
-    branches collapse inside the window stage: the within-slice gaps
+    Same slice trick as :func:`sessionize_scalable`: within-``(key,
+    slice)`` lag gives the intra-slice gaps, and the per-``(key, slice)``
+    first/last summary (≤ ``n_slices`` rows per key) yields each boundary
+    gap via a lag over slices. Together that is every consecutive gap
+    exactly once: slicing is monotone in ``ts_col`` (ties share a slice),
+    so concatenating slices in order is the group's global order.
+
+    Both branches collapse inside the window stage: the within-slice gaps
     partial-aggregate to ``(part_cols, _slice)`` grain with NO exchange
     (grouping keys ⊇ the lag window's partition keys), the boundary gaps
     come from the same tiny frame's slice-lag, and the union the caller
-    aggregates is summary-grain — no persist, no corpus-sized union, one
-    corpus shuffle total.
+    aggregates is summary-grain — no corpus-sized union, one corpus
+    shuffle total (measured 18.8 → 6.5 s at x512 vs the row-level gap
+    form, events_interarrival_profile, SCALE_RUN.json).
 
-    ``moment_aggs`` are evaluated over ``F.col(gap_col)`` at BOTH grains
-    and must be combinable by plain re-aggregation downstream (the
-    default: ``n/s/ssq`` with the exact DECIMAL(19,0) convention of
+    ``ts_col`` must be numeric (cast timestamps first). ``moment_aggs``
+    are evaluated over ``F.col(gap_col)`` at BOTH grains and must be
+    combinable by plain re-aggregation downstream (the default:
+    ``n/s/ssq`` with the exact DECIMAL(19,0) convention of
     events_interarrival_profile — order-independent integer sums, so the
     two-level aggregation is bit-equal to the flat one). Returns
     ``part_cols + moment_agg columns`` at ``(part_cols, _slice)``-grain ∪
@@ -1027,10 +810,10 @@ def gap_moments_scalable(
 
     Output-row caveat (ADVICE r9 #3, part of the return contract): a
     single-event (key, slice) cell emits a row with ZERO-valued moments
-    (``n_gaps = 0`` under the default aggs) where :func:`gaps_scalable`
-    emits no row at all — consumers that count keys or join on the output
-    must filter (``n_gaps > 0``) first, as events_interarrival_profile
-    does.
+    (``n_gaps = 0`` under the default aggs) where the flat lag-window form
+    emits no gap row at all — consumers that count keys or join on the
+    output must filter (``n_gaps > 0``) first, as
+    events_interarrival_profile does.
 
     Hot-routed slicing (r10, same rationale as :func:`sessionize_scalable`):
     cold keys take slice 0 — their cell IS the whole key, so the r9 form's
@@ -1050,23 +833,18 @@ def gap_moments_scalable(
         ]
     (lo, hi), hot = _hot_key_stats(df, part_cols, ts, hot_threshold)
     if hot is None:
-        w = Window.partitionBy(*part_cols).orderBy(ts_col, *tie)
-        return (
-            df.withColumn(gap_col, ts - F.lag(ts).over(w))
-            .groupBy(*part_cols)
-            .agg(*moment_aggs)
-        )
-    width = max((hi - lo) / n_slices, 1e-9)
-    slice_id = F.least(
-        F.floor((ts - F.lit(lo)) / F.lit(width)), F.lit(n_slices - 1)
-    ).cast("bigint")
-    d = _hot_sliced(df, part_cols, hot, slice_id)
-    w_in = Window.partitionBy(*part_cols, "_slice").orderBy(ts_col, *tie)
-    d = d.withColumn(gap_col, ts - F.lag(ts).over(w_in))
+        keys, d = part_cols, df
+    else:
+        keys = [*part_cols, "_slice"]
+        d = _hot_sliced(df, part_cols, hot, ts, (lo, hi), n_slices)
+    w = Window.partitionBy(*keys).orderBy(ts_col, *tie)
+    d = d.withColumn(gap_col, ts - F.lag(ts).over(w))
+    if hot is None:
+        return d.groupBy(*part_cols).agg(*moment_aggs)
     # One pass: per-(key, slice) gap moments AND the slice's first/last
     # timestamp (for boundary gaps) — grouping keys ⊇ window partition
     # keys, so the corpus collapses to summary grain with no exchange.
-    loc = d.groupBy(*part_cols, "_slice").agg(
+    loc = d.groupBy(*keys).agg(
         F.min(ts).alias("_first"),
         F.max(ts).alias("_last"),
         *moment_aggs,

@@ -41,9 +41,9 @@ def session_stats(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     Uses the bucket-and-stitch form: a hot user (bot/celebrity — measured
     1.61× skew at x32 with a 25%-hot key on the plain window form,
     SCALE_RUN.json) no longer serializes into one task (measured 0.74
-    post-fix; the skew-split ``sessionize_auto`` variant measured WORSE on
-    both axes at every observable tier — see its docstring — so the pure
-    form is the production path). Every stat here is a re-aggregable
+    post-fix; a persisted skew split unioning a plain-window branch for
+    cold users with a sliced branch for hot ones measured WORSE on both
+    axes at every observable tier). Every stat here is a re-aggregable
     session aggregate (count→sum, min/max of the session bounds), so the
     SESSION-GRAIN fused form applies: the corpus collapses to local-session
     grain inside the bucket-window stage, and the stitch, offset join, and

@@ -158,57 +158,6 @@ def test_gap_units_microseconds_matches_window_form(spark):
     assert sorted(want.select(cols).collect()) == sorted(got.select(cols).collect())
 
 
-def test_sessionize_auto_mixed_population(spark):
-    # hot user routed to bucket-and-stitch, cold mass to the plain window —
-    # the union must equal the window form run over EVERYTHING
-    from seoul_big_data_spark.operators.windows import sessionize_auto
-
-    rng = random.Random(5)
-    rows = []
-    t = 0
-    for _ in range(3000):  # hot user (threshold set below 3000)
-        t += rng.choice([10, 1799, 1801, 4000])
-        rows.append((1, t))
-    for u in range(2, 30):
-        tu = rng.randrange(0, t)
-        for _ in range(30):
-            tu += rng.choice([60, 2000])
-            rows.append((u, tu))
-    df = _mk(spark, rows)
-    want = _ids(sessionize(df, "user_id", "ts", gap_minutes=30))
-    got = _ids(
-        sessionize_auto(
-            df, "user_id", "ts", gap_minutes=30, hot_threshold=1000, n_slices=8
-        )
-    )
-    assert want == got
-    # threshold boundary: exactly-at-threshold user stays on the window path
-    got_all_cold = _ids(
-        sessionize_auto(df, "user_id", "ts", gap_minutes=30, hot_threshold=10**9)
-    )
-    assert want == got_all_cold
-
-
-def test_gaps_auto_mixed_population(spark):
-    from seoul_big_data_spark.operators.windows import gaps_auto
-
-    rng = random.Random(17)
-    rows = [(1, rng.randrange(0, 10**7)) for _ in range(2500)]  # hot key
-    for u in range(2, 20):
-        rows += [(u, rng.randrange(0, 10**7)) for _ in range(50)]
-    df = spark.createDataFrame(rows, "k bigint, t bigint")
-    w = Window.partitionBy("k").orderBy("t")
-    want = sorted(
-        df.select("k", (F.col("t") - F.lag("t").over(w)).alias("gap"))
-        .filter(F.col("gap").isNotNull())
-        .collect()
-    )
-    got = sorted(
-        gaps_auto(df, ["k"], "t", hot_threshold=1000, n_slices=9).collect()
-    )
-    assert want == got
-
-
 def _agg_ref(df):
     """Window-form session stats: the ground truth the fused form must hit."""
     s = sessionize(df, "user_id", "ts", gap_minutes=30)
@@ -669,3 +618,35 @@ def test_footer_fast_path_skips_probe_job(spark, monkeypatch):
         )
     )
     assert a == b
+
+
+def test_static_row_bound_without_pyarrow_falls_back(spark, sf_dir, monkeypatch):
+    """With no importable pyarrow.parquet the footer bound must report
+    "no static bound" (None) instead of raising, so the sampled probe
+    decides the route — and the fused form still matches the window form."""
+    import sys
+
+    from seoul_big_data_spark.operators.windows import (
+        _static_row_bound,
+        sessionize_agg_scalable,
+    )
+    from seoul_big_data_spark.sources.tables import load
+
+    e = load(spark, "events", sf_dir).select("user_id", "ts")
+    monkeypatch.setitem(sys.modules, "pyarrow.parquet", None)
+    assert _static_row_bound(e) is None
+    got = sorted(
+        sessionize_agg_scalable(
+            e,
+            "user_id",
+            "ts",
+            local_aggs=[F.count("*").alias("n_events")],
+            merge_aggs=[
+                F.sum("n_events").alias("n_events"),
+                F.min("s_first_tss").alias("lo"),
+                F.max("s_last_tss").alias("hi"),
+            ],
+            gap_minutes=30,
+        ).collect()
+    )
+    assert got == _agg_ref(e)
